@@ -100,12 +100,12 @@ class ClinicalAPI:
             return _envelope(False, str(e))
         job_id = str(_uuid.uuid4())
         if self.background:
-            t = threading.Thread(
+            # Seed the pending row before returning (etl.service.ts:28-43);
+            # the worker thread then only marks it.
+            self.ledger.submit(path.name, job_id=job_id)
+            threading.Thread(
                 target=self._run_safely, args=(str(path), job_id), daemon=True
-            )
-            # Seed the pending row before returning (etl.service.ts:28-43).
-            self.ledger.submit(filename, job_id=job_id)
-            t.start()
+            ).start()
         else:
             self._run_safely(str(path), job_id)
         return _envelope(True, "ETL job submitted", {"jobId": job_id, "status": "running"})
@@ -113,7 +113,12 @@ class ClinicalAPI:
     def _run_safely(self, path: str, job_id: str) -> None:
         try:
             process_job(
-                self.spark, self.wh, path, job_id=job_id, data_root=self.data_root
+                self.spark,
+                self.wh,
+                path,
+                job_id=job_id,
+                data_root=self.data_root,
+                submitted=self.background,
             )
         except Exception:  # noqa: BLE001 — runner already marked the job failed
             pass

@@ -55,11 +55,15 @@ def process_job(
     *,
     job_id: str | None = None,
     data_root: str | None = None,
+    submitted: bool = False,
 ) -> str:
-    """Run the full pipeline for one CSV; returns the job id."""
+    """Run the full pipeline for one CSV; returns the job id.
+
+    ``submitted=True`` means the caller already wrote the pending row for
+    ``job_id`` (the API's background path), so it is not written again."""
     ledger = JobLedger(warehouse)
     filename = os.path.basename(csv_path)
-    jid = ledger.submit(filename, job_id=job_id)
+    jid = job_id if submitted else ledger.submit(filename, job_id=job_id)
     try:
         ledger.mark(jid, "running", "reading csv", progress=10)
         raw = read_clinical_csv(spark, csv_path, root=data_root)

@@ -4,7 +4,8 @@
 The reference leans on Postgres unique constraints for retry-safe re-runs:
 ``DO NOTHING`` appends (staging db.py:41-58, processed db.py:88-100), the
 asymmetric ``DO UPDATE`` aggregation merge (db.py:110-127), and job-ledger
-upserts (db.py:60-67). Here each becomes a set-based join:
+upserts (db.py:60-67). Here the data tables' writes become set-based joins
+(the job ledger writes one file per job itself — ``jobs/ledger.py``):
 
 * ``append_if_absent`` — incoming LEFT ANTI JOIN existing on the key, then
   a plain parquet append (new files only; safe and atomic-enough for a
@@ -12,7 +13,7 @@ upserts (db.py:60-67). Here each becomes a set-based join:
 * ``merge_aggregations`` — full-outer merge with the reference's declared
   asymmetry (§2.9.3): cnt/avg replaced by the new job's values,
   min/max merged across history via LEAST/GREATEST.
-* ``upsert`` — last-write-wins full-outer merge (job ledger, participants).
+* ``upsert`` — last-write-wins full-outer merge (participants).
 
 Merges are **partition-scoped** where the layout allows it: when the merge
 key contains the table's partition column, only the partition directories
@@ -52,14 +53,14 @@ from pyspark.sql import functions as F
 #: The SURVEY §4/§7 blueprint layout: bronze partitioned by ingestion job
 #: (per-job pruning for re-ingest anti-joins and the data API's job reads),
 #: silver/gold/participants by study (the reference's leading index
-#: column), the job ledger by job id. Every merge target's key contains
-#: its partition column, so all merges run partition-scoped.
+#: column). Every merge target's key contains its partition column, so
+#: all merges run partition-scoped. The job ledger is not listed: it
+#: writes its own ``id=`` directories without going through the sinks.
 CLINICAL_PARTITIONING = {
     "staging_clinical_measurements": ["job_id"],
     "processed_measurements": ["study_id"],
     "measurement_aggregations": ["study_id"],
     "participants": ["study_id"],
-    "etl_jobs": ["id"],
 }
 
 
@@ -190,8 +191,8 @@ class ParquetWarehouse:
 
         The warehouse is single-writer / many-reader; ``_rewrite`` swaps
         the table directory, so a reader can momentarily see a vanishing
-        file listing *or a vanished directory* (e.g. a status poller
-        during a background job's ledger update). Both the exception path
+        file listing *or a vanished directory* (e.g. a ``get_data`` call
+        during a background job's bronze merge). Both the exception path
         and the absent-directory path retry; ``None`` is returned only
         when absence persists with no swap in flight. The Delta/Iceberg
         swap-out removes this entirely via snapshot isolation.

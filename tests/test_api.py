@@ -133,3 +133,54 @@ def test_background_submit_polls_to_completion(spark, warehouse, tmp_path):
         _time.sleep(1)
     assert status == "completed"
     assert len(api.get_data()["data"]) == 3
+
+
+def _background_api(spark, warehouse, tmp_path):
+    from clinical_api_etl_spark.api import ClinicalAPI
+
+    data = tmp_path / "bgdata"
+    data.mkdir()
+    (data / "study.csv").write_text("\n".join([HEADER, *ROWS]) + "\n")
+    return ClinicalAPI(spark, warehouse, str(data), background=True)
+
+
+def test_background_pending_row_written_once(spark, warehouse, tmp_path):
+    """The API writes the pending row; the worker thread only marks it, so
+    ``created_at`` stays the time of the submit call."""
+    import time as _time
+    from datetime import datetime
+
+    api = _background_api(spark, warehouse, tmp_path)
+    before = datetime.now()
+    jid = api.submit_job("study.csv")["data"]["jobId"]
+    after = datetime.now()
+
+    deadline = _time.time() + 120
+    while api.get_job_status(jid)["data"]["status"] not in ("completed", "failed"):
+        assert _time.time() < deadline
+        _time.sleep(0.2)
+    row = api.ledger.fetch(jid)
+    assert row["status"] == "completed"
+    assert before <= row["created_at"] <= after
+
+
+def test_background_status_poll_never_regresses(spark, warehouse, tmp_path):
+    """A tight status-poll loop during a background job always finds the
+    job, and neither its progress nor its status ever goes backwards."""
+    import time as _time
+
+    api = _background_api(spark, warehouse, tmp_path)
+    jid = api.submit_job("study.csv")["data"]["jobId"]
+    rank = {"pending": 0, "running": 1, "completed": 2}
+    seen: list[tuple[int, int]] = []
+    deadline = _time.time() + 120
+    while _time.time() < deadline:
+        out = api.get_job_status(jid)
+        assert out["success"], out["message"]
+        seen.append((rank[out["data"]["status"]], out["data"]["progress"]))
+        if out["data"]["status"] == "completed":
+            break
+        _time.sleep(0.005)
+    assert seen[-1] == (2, 100)
+    assert seen == sorted(seen), [s for a, s in zip(seen, seen[1:]) if s < a]
+    assert len({p for _, p in seen}) > 2  # the loop saw the job in progress
